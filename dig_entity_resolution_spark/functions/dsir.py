@@ -54,6 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .hashing import md5_long
+from .lm import _array_lit
 from .quality_model import _bucket, _grams, synth_quality_corpus
 
 #: integer log10 micro-units — matches quality_model / lm
@@ -158,13 +159,10 @@ def dsir_score_py(text: str, wt: DsirWeights) -> tuple[int, int]:
 
 
 def _weights_lit(wt: DsirWeights) -> Column:
-    # one-NODE literal (notes #46 + r8): F.lit(list) would round-trip
-    # py4j per element, and a parsed array(...) leaves dim=4096 Literal
-    # children for every plan's analyzer walk; from_json of one string
-    # constant-folds to the same array literal (see lm._array_lit)
-    return F.from_json(
-        F.lit("[" + ",".join(str(v) for v in wt.w) + "]"), "array<bigint>"
-    )
+    # one-NODE literal (notes #46): F.lit(list) would round-trip py4j per
+    # element, and a parsed array(...) leaves dim=4096 Literal children
+    # for every plan's analyzer walk (see lm._array_lit)
+    return _array_lit(wt.w)
 
 
 def dsir_logratio_micro(text: Column | str, wt: DsirWeights) -> Column:

@@ -45,6 +45,7 @@ quality gates unnoticed).
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -256,7 +257,7 @@ def score_text_py(text: str, lm: StupidBackoffLM) -> tuple[int, int]:
     return len(ws), total
 
 
-def _array_lit(values: tuple[int, ...]) -> Column:
+def _array_lit(values: Sequence[int]) -> Column:
     """array<long> literal as ONE AST NODE. `F.lit(list)` builds the
     array element-by-element over py4j — 14.8s for the 32k trigram
     table (r6); a parsed `F.expr("array(...)")` builds fast but leaves
@@ -266,9 +267,14 @@ def _array_lit(values: tuple[int, ...]) -> Column:
     guide §1.2/§5). `from_json` of one string literal is a 2-node tree
     that ConstantFolding evaluates to the same array literal before
     execution (verified: optimized plan shows the materialized array;
-    element values bit-identical)."""
+    element values bit-identical). FAILFAST: under the default
+    PERMISSIVE mode a malformed or bigint-overflowing element turns the
+    WHOLE table into NULL, silently nulling every score; FAILFAST
+    raises instead. Shared by the LM, DSIR and quality-model tables."""
     return F.from_json(
-        F.lit("[" + ",".join(str(v) for v in values) + "]"), "array<bigint>"
+        F.lit("[" + ",".join(str(v) for v in values) + "]"),
+        "array<bigint>",
+        {"mode": "FAILFAST"},
     )
 
 

@@ -29,6 +29,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .hashing import md5_long
+from .lm import _array_lit
 
 DIM = 1024
 MICRO = 1_000_000
@@ -197,11 +198,7 @@ def _quality_logit_micro(
         lambda x, y: F.concat(x, F.lit(" "), y),
     )
     grams = F.concat(toks, bigrams)
-    # one-NODE literal: constant-folds to the same array (lm._array_lit)
-    wlit = F.from_json(
-        F.lit("[" + ",".join(str(w) for w in weights_micro) + "]"),
-        "array<bigint>",
-    )
+    wlit = _array_lit(weights_micro)  # one-NODE literal (see its docstring)
     gram_sum = F.aggregate(
         grams,
         F.lit(0).cast("long"),

@@ -2,7 +2,9 @@
 
 Five dedup families, each a composition of engine primitives:
   exact          — md5-groupBy on normalized text
-  minhash_lsh    — shingle → MinHash → band → bucket self-join (Broder/MMDS)
+  minhash_lsh    — shingle → MinHash → band → bucket self-join → packed
+                   Jaccard verify (Broder/MMDS); the one chain the batch
+                   operators and operators.dedup_incremental share
   simhash        — 64-bit SimHash + banded-bit blocking + Hamming filter
   ngram_jaccard  — char-n-gram Jaccard over blocked candidates
   embedding      — cosine near-dup over a vector column
@@ -16,7 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long
 from ..functions.minhash import hamming64, lsh_band_keys, minhash_signature, simhash_table
 from ..functions.normalize import (
     char_shingles,
@@ -69,6 +70,111 @@ def exact_dup_groups(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _shingle_rows(
+    docs: DataFrame, id_col: str, text_col: str, k: int, rebalance: bool = True
+) -> DataFrame:
+    """(doc_id, shingles) for every doc with at least one shingle.
+
+    The normalized text is persisted before shingling: CollapseProject
+    inlines expressions into transform() lambdas, so a composed
+    char_shingles(normalize_text(...)) re-runs the regex normalization
+    once PER SHINGLE POSITION (measured 60x slower), and a withColumn
+    projection is NOT a reliable barrier (notes #16). A cache is.
+
+    rebalance: repartition the NARROW normalized rows to the session's
+    parallelism before the CPU-heavy shingle/signature expressions. AQE
+    coalesces upstream join/checkpoint outputs by BYTES (a 50k-doc corpus
+    is one ~64MB partition), which is blind to the per-row CPU of hashing
+    ~300 shingles × num_perm — measured 27s single-core vs 4.4s spread at
+    the 10x bench corpus. Same rule as score_pairs; at real scale this is
+    a no-op rebalance of narrow rows. Callers whose input is already
+    spread (repartitioned right after a scan) pass False.
+
+    k ≤ 8 is required: the verify packs each shingle into one long
+    (shingle_pack), and a k > 8 pack would overflow it.
+    """
+    if k > 8:
+        raise ValueError(f"near-dup shingles require shingle_k <= 8, got {k}")
+    normed = docs.select(
+        F.col(id_col).alias("doc_id"), normalize_text(text_col).alias("_norm")
+    )
+    if rebalance:
+        normed = normed.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    return (
+        _persist(normed)
+        .select("doc_id", char_shingles("_norm", k).alias("shingles"))
+        .filter(F.size("shingles") > 0)
+    )
+
+
+def _bucket_rows(
+    shingled: DataFrame, num_perm: int, bands: int, hash_fn: str
+) -> DataFrame:
+    """(doc_id, bucket): one row per LSH band of each doc's signature.
+    Carries ONLY ids — the wide shingle arrays must not flow through the
+    bucket self-join + dropDuplicates shuffles (measured 14x slower when
+    they do); the verify joins packed shingles back once per pair."""
+    sig = shingled.select(
+        "doc_id", minhash_signature("shingles", num_perm, hash_fn).alias("sig")
+    )
+    return sig.select(
+        "doc_id",
+        F.explode(lsh_band_keys("sig", bands, num_perm // bands, hash_fn)).alias(
+            "band"
+        ),
+    ).select(
+        "doc_id",
+        F.concat_ws(":", F.col("band.band_id"), F.col("band.band_hash")).alias(
+            "bucket"
+        ),
+    )
+
+
+def _cold_pairs(bucket_rows: DataFrame) -> DataFrame:
+    """Canonical candidate pairs (id1 < id2) sharing a bucket; the rows
+    must already be restricted to cold buckets."""
+    left = bucket_rows.select("bucket", F.col("doc_id").alias("id1"))
+    right = bucket_rows.select("bucket", F.col("doc_id").alias("id2"))
+    return (
+        left.join(right, "bucket")
+        .filter(F.col("id1") < F.col("id2"))
+        .select("id1", "id2")
+        .dropDuplicates(["id1", "id2"])
+    )
+
+
+def _packed(shingled: DataFrame, k: int) -> DataFrame:
+    """(doc_id, _ish, _sz): each doc's distinct shingle set packed to
+    longs (shingle_pack, a per-row projection) plus its size.
+    Intersecting STRING arrays per candidate pair dominated the verify
+    (measured 20.5s of a 23s sf0.1 query at 1.1M candidates); the pack
+    is an injection, so |A∩B| is unchanged while array_intersect stops
+    hashing strings."""
+    return shingled.select(
+        "doc_id",
+        shingle_pack("shingles", k).alias("_ish"),
+        F.size("shingles").alias("_sz"),
+    )
+
+
+def _verify(cand: DataFrame, packed: DataFrame) -> DataFrame:
+    """(id1, id2, jaccard) for candidate pairs: exact shingle Jaccard over
+    the packed sets. The arrays are distinct, so |A∪B| = sz1+sz2−|A∩B|."""
+    s1 = packed.select(
+        F.col("doc_id").alias("id1"), F.col("_ish").alias("i1"), F.col("_sz").alias("z1")
+    )
+    s2 = packed.select(
+        F.col("doc_id").alias("id2"), F.col("_ish").alias("i2"), F.col("_sz").alias("z2")
+    )
+    inter = F.size(F.array_intersect("i1", "i2"))
+    jac = inter.cast("double") / (F.col("z1") + F.col("z2") - inter).cast("double")
+    return (
+        cand.join(s1.hint("shuffle_hash"), "id1")
+        .join(s2.hint("shuffle_hash"), "id2")
+        .select("id1", "id2", jac.alias("jaccard"))
+    )
+
+
 def minhash_lsh_dup_pairs(
     docs: DataFrame,
     id_col: str,
@@ -79,84 +185,30 @@ def minhash_lsh_dup_pairs(
     jaccard_threshold: float = 0.5,
     hash_fn: str = "xxhash64",
     max_bucket: int = 200,
-    encode_verify: bool = True,
     rebalance: bool = True,
 ) -> DataFrame:
     """Near-dup pairs via MinHash LSH, verified by true shingle Jaccard.
 
     Returns (id1, id2, jaccard) with jaccard ≥ threshold. Buckets larger than
     max_bucket are suppressed (stop-key logic) before the self-join.
-
-    encode_verify: run the exact-Jaccard verify over int-encoded shingle
-    arrays instead of the raw strings (identical result — an injection
-    preserves intersection counts; see the inline note). The encoding is
-    the arithmetic shingle_pack for k ≤ 8 (a projection, no extra
-    shuffle); k > 8 keeps the string verify (also exact). On by
-    default; callers whose config makes candidates sparse (tight
-    max_bucket + high threshold) can turn it off.
-
-    rebalance: repartition the normalized projection to the session
-    parallelism before the CPU-heavy shingle/signature expressions (see
-    the inline note — AQE byte-coalescing starves them otherwise).
-    Callers whose input is already spread (e.g. repartitioned right
-    after a scan) pass False to skip the redundant shuffle.
+    shingle_k must be ≤ 8 (ValueError otherwise). rebalance: see
+    _shingle_rows.
     """
-    rows = num_perm // bands
-    # persist: `base` feeds both bucketing and pair verification, and
+    # persist: `base` feeds both bucketing and the packed verify table, and
     # `buckets` feeds the hot-key agg plus both join sides — without
     # persistence Catalyst re-evaluates the num_perm-hash signature per
     # branch (measured 5x the work). At pipeline scale the signatures are a
     # checkpointed stage instead; inside this one-shot operator
     # MEMORY_AND_DISK is the right tool.
-    # CollapseProject inlines expressions into transform() lambdas, so a
-    # composed char_shingles(normalize_text(...)) re-runs the regex
-    # normalization once PER SHINGLE POSITION (measured 60x slower), and a
-    # withColumn projection is NOT a reliable barrier. A cache IS: persist
-    # (doc_id, norm) first, then shingle from the cached column.
-    # r8: repartition the NARROW normalized projection to the session's
-    # parallelism before the CPU-heavy shingle/signature expressions. AQE
-    # coalesces upstream join/checkpoint outputs by BYTES (a 50k-doc
-    # corpus is one ~64MB partition), which is blind to the per-row CPU
-    # of hashing ~300 shingles × num_perm — measured 27s single-core vs
-    # 4.4s spread at the 10x bench corpus. Same rule as score_pairs; at
-    # real scale the corpus dwarfs the advisory size and this is a no-op
-    # rebalance of narrow rows.
-    norm_proj = docs.select(
-        F.col(id_col).alias("doc_id"), normalize_text(text_col).alias("_norm")
-    )
-    if rebalance:
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        norm_proj = norm_proj.repartition(par)
-    normed = _persist(norm_proj)
-    base = _persist(
-        normed.select("doc_id", char_shingles("_norm", shingle_k).alias("shingles"))
-        .filter(F.size("shingles") > 0)
-    )
-    sig = base.select(
-        "doc_id",
-        "shingles",
-        minhash_signature("shingles", num_perm, hash_fn).alias("sig"),
-    )
-    # buckets carry ONLY ids — the wide shingle arrays must not flow through
-    # the self-join + dropDuplicates shuffles (measured 14x slower when they
-    # do); shingles are joined back once per surviving pair for verification
-    buckets = sig.select(
-        "doc_id",
-        F.explode(lsh_band_keys("sig", bands, rows, hash_fn)).alias("band"),
-    ).select(
-        "doc_id",
-        F.concat_ws(":", F.col("band.band_id"), F.col("band.band_hash")).alias(
-            "bucket"
-        ),
-    )
-    buckets = _persist(buckets)
-    # r8: materialize the persisted intermediates EAGERLY, in dependency
+    base = _persist(_shingle_rows(docs, id_col, text_col, shingle_k, rebalance))
+    buckets = _persist(_bucket_rows(base, num_perm, bands, hash_fn))
+    # Materialize the persisted intermediates EAGERLY, in dependency
     # order. The final plan fans out into several branches over `base`
     # and `buckets` (hot-key agg + both self-join sides + both verify
     # hydrations); when the caches are still cold at execution time,
     # concurrent stages race to fill them and each recomputes the
     # num_perm-hash signature chain (measured 24-30s vs 21s at the 10x
-    # bench corpus; worst observed in-pipeline wall 76s). Two tiny count
+    # bench corpus; worst observed in-pipeline wall 76s). Small count
     # jobs serialize the cache fill once.
     base.count()
     buckets.count()
@@ -166,65 +218,10 @@ def minhash_lsh_dup_pairs(
         .filter(F.col("n") > max_bucket)
         .select("bucket")
     )
-    buckets = buckets.join(F.broadcast(hot), "bucket", "left_anti")
-    left = buckets.select("bucket", F.col("doc_id").alias("id1"))
-    right = buckets.select("bucket", F.col("doc_id").alias("id2"))
-    cand = (
-        left.join(right, "bucket")
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
-    # r8 verify optimization: intersecting 5-char STRING arrays per
-    # candidate pair dominated the wall (measured 20.5s of a 23s sf0.1
-    # query at the uncapped oracle config's 1.1M candidates). Re-encode
-    # each record's distinct shingle set as ints — an injection, so
-    # |A∩B| (and with distinct arrays |A∪B| = sz1+sz2−|A∩B|) is
-    # unchanged while array_intersect stops hashing strings (dictionary
-    # form measured 5.9s). Late-r8: the encoding is now the arithmetic
-    # base-128 pack of the normalized shingle chars (shingle_pack — a
-    # per-row projection) instead of a distinct+row_number dictionary:
-    # provably injective on the normalize_text alphabet for k ≤ 8, and
-    # it deletes the dictionary's explode + join + collect_list
-    # re-aggregation (a full corpus-shingle shuffle) from the plan.
-    # Dictionary fallback for k > 8 (pack would overflow a long).
-    if encode_verify and shingle_k <= 8:
-        enc = _persist(
-            base.select(
-                "doc_id",
-                shingle_pack("shingles", shingle_k).alias("_ish"),
-                F.size("shingles").alias("_sz"),
-            )
-        )
-        enc.count()  # same eager-fill rule: enc feeds both verify sides
-        s1 = enc.select(
-            F.col("doc_id").alias("id1"),
-            F.col("_ish").alias("i1"),
-            F.col("_sz").alias("z1"),
-        )
-        s2 = enc.select(
-            F.col("doc_id").alias("id2"),
-            F.col("_ish").alias("i2"),
-            F.col("_sz").alias("z2"),
-        )
-        inter = F.size(F.array_intersect("i1", "i2"))
-        jac = inter.cast("double") / (
-            F.col("z1") + F.col("z2") - inter
-        ).cast("double")
-    else:
-        s1 = base.select(
-            F.col("doc_id").alias("id1"), F.col("shingles").alias("i1")
-        )
-        s2 = base.select(
-            F.col("doc_id").alias("id2"), F.col("shingles").alias("i2")
-        )
-        jac = token_jaccard("i1", "i2")
-    verified = (
-        cand.join(s1.hint("shuffle_hash"), "id1")
-        .join(s2.hint("shuffle_hash"), "id2")
-        .select("id1", "id2", jac.alias("jaccard"))
-    )
-    return verified.filter(F.col("jaccard") >= jaccard_threshold)
+    cand = _cold_pairs(buckets.join(F.broadcast(hot), "bucket", "left_anti"))
+    enc = _persist(_packed(base, shingle_k))
+    enc.count()  # same eager-fill rule: enc feeds both verify sides
+    return _verify(cand, enc).filter(F.col("jaccard") >= jaccard_threshold)
 
 
 def simhash_dup_pairs(
@@ -319,8 +316,8 @@ def ngram_jaccard_dup_pairs(
         F.col(id_col).alias("doc_id"),
         normalize_text(text_col).alias("norm"),
     ).withColumn("grams", char_shingles("norm", n))  # withColumn barrier:
-    # keeps the regex normalization out of the shingle lambda (see
-    # minhash_lsh_dup_pairs note)
+    # keeps the regex normalization out of the shingle lambda (see the
+    # _shingle_rows note on why a persist is the reliable form)
     # persist: blocked feeds the hot-key agg plus both self-join sides —
     # 3 branches would otherwise each re-run normalization + shingling
     blocked = _persist(
@@ -546,16 +543,9 @@ def near_dup_corpus(
     jaccard_threshold: float = 0.5,
     hash_fn: str = "xxhash64",
     max_bucket: int = 200,
-    encode_verify: bool = True,
     rebalance: bool = True,
 ) -> DataFrame:
     """The PRODUCTION dedup end product: the kept (deduplicated) corpus.
-
-    encode_verify defaults True since the arithmetic shingle_pack
-    (late-r8): the dictionary-build cost that made the string verify
-    the better default for this capped config is gone — A/B at sf0.1:
-    parity at the 5k corpus (5.2-5.8s both), int verify wins at 10x
-    (14.4/17.1 vs 19.9/19.7s). Results identical (exact injection).
 
     Chain: MinHash-LSH near-dup pairs in the fast configuration (xxhash64
     signatures, hot buckets capped at `max_bucket` via the broadcast
@@ -588,7 +578,6 @@ def near_dup_corpus(
         jaccard_threshold=jaccard_threshold,
         hash_fn=hash_fn,
         max_bucket=max_bucket,
-        encode_verify=encode_verify,
         rebalance=rebalance,
     )
     edges = pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))

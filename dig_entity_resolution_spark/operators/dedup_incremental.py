@@ -62,11 +62,8 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.minhash import lsh_band_keys, minhash_signature
-from ..functions.normalize import char_shingles, normalize_text, shingle_pack
-from ..functions.similarity import token_jaccard
 from .cluster import connected_components
-from .dedup import _persist
+from .dedup import _bucket_rows, _cold_pairs, _packed, _persist, _shingle_rows, _verify
 
 
 @dataclass(frozen=True)
@@ -77,6 +74,10 @@ class NearDupConfig:
     jaccard_threshold: float = 0.5
     hash_fn: str = "xxhash64"
     max_bucket: int = 200
+
+    def __post_init__(self):
+        if self.shingle_k > 8:
+            raise ValueError(f"shingle_k must be <= 8, got {self.shingle_k}")
 
 
 @dataclass
@@ -118,118 +119,6 @@ def _snap(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def _shingle_rows(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(doc_id, shingles) — persisted normalization barrier first (the
-    CollapseProject/notes-#16 rule: shingling from an unpersisted
-    normalize re-runs the regex once per shingle position)."""
-    # r8: spread the narrow normalized rows to the session's parallelism
-    # before shingling/hashing — upstream AQE byte-coalescing otherwise
-    # leaves the CPU-heavy expressions on 1-2 cores (see the same note in
-    # dedup.minhash_lsh_dup_pairs; measured 27s -> 4.4s at 10x).
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    normed = _persist(
-        docs.select(
-            F.col(id_col).alias("doc_id"), normalize_text(text_col).alias("_norm")
-        ).repartition(par)
-    )
-    return normed.select(
-        "doc_id", char_shingles("_norm", k).alias("shingles")
-    ).filter(F.size("shingles") > 0)
-
-
-def _bucket_rows(shingled: DataFrame, cfg: NearDupConfig) -> DataFrame:
-    """(doc_id, bucket) — identical bucket derivation to
-    dedup.minhash_lsh_dup_pairs (same expressions; the batch-equality
-    test pins them together)."""
-    rows = cfg.num_perm // cfg.bands
-    sig = shingled.select(
-        "doc_id",
-        minhash_signature("shingles", cfg.num_perm, cfg.hash_fn).alias("sig"),
-    )
-    return sig.select(
-        "doc_id",
-        F.explode(lsh_band_keys("sig", cfg.bands, rows, cfg.hash_fn)).alias("band"),
-    ).select(
-        "doc_id",
-        F.concat_ws(":", F.col("band.band_id"), F.col("band.band_hash")).alias(
-            "bucket"
-        ),
-    )
-
-
-def _verify(cand: DataFrame, shingled: DataFrame, threshold: float) -> DataFrame:
-    """jaccard-verify candidate (id1, id2) pairs against true shingle sets."""
-    s1 = shingled.select(F.col("doc_id").alias("id1"), F.col("shingles").alias("sh1"))
-    s2 = shingled.select(F.col("doc_id").alias("id2"), F.col("shingles").alias("sh2"))
-    return (
-        cand.join(s1.hint("shuffle_hash"), "id1")
-        .join(s2.hint("shuffle_hash"), "id2")
-        .filter(token_jaccard("sh1", "sh2") >= threshold)
-        .select("id1", "id2")
-    )
-
-
-def _verify_encoded(
-    cand: DataFrame, shingled: DataFrame, threshold: float, shingle_k: int
-) -> DataFrame:
-    """Exact verify over int-encoded shingle sets — the same injection
-    as dedup.minhash_lsh_dup_pairs (|A∩B| unchanged; distinct arrays
-    give |A∪B| = sz1+sz2−inter). Used by near_dup_init, whose candidate
-    set is full-corpus-sized (string-array intersection was the init
-    wall at the 10x bench corpus: ~11s of 33s); delta batches keep
-    `_verify` — the encode projection per 100-doc delta buys nothing.
-    Late-r8: the encoding is the arithmetic base-128 shingle_pack (a
-    per-row projection; provably injective on the normalize_text
-    alphabet for k ≤ 8) instead of a distinct+row_number dictionary —
-    the dictionary's explode + join + collect_list re-aggregation was a
-    full corpus-shingle shuffle (measured: the whole init-verify stage
-    9.3s → ~3s at the 10x corpus). Falls back to the string verify for
-    k > 8 (also exact; pack would overflow a long)."""
-    if shingle_k > 8:
-        return _verify(cand, shingled, threshold)
-    enc = _persist(
-        shingled.select(
-            "doc_id",
-            shingle_pack("shingles", shingle_k).alias("_ish"),
-            F.size("shingles").alias("_sz"),
-        )
-    )
-    enc.count()  # eager cache fill: both verify sides read it
-    s1 = enc.select(
-        F.col("doc_id").alias("id1"),
-        F.col("_ish").alias("i1"),
-        F.col("_sz").alias("z1"),
-    )
-    s2 = enc.select(
-        F.col("doc_id").alias("id2"),
-        F.col("_ish").alias("i2"),
-        F.col("_sz").alias("z2"),
-    )
-    inter = F.size(F.array_intersect("i1", "i2"))
-    jac = inter.cast("double") / (
-        F.col("z1") + F.col("z2") - inter
-    ).cast("double")
-    return (
-        cand.join(s1.hint("shuffle_hash"), "id1")
-        .join(s2.hint("shuffle_hash"), "id2")
-        .filter(jac >= threshold)
-        .select("id1", "id2")
-    )
-
-
-def _cold_pairs(bucket_rows: DataFrame) -> DataFrame:
-    """Canonical candidate pairs from (doc_id, bucket) rows (assumed
-    already restricted to cold buckets)."""
-    left = bucket_rows.select("bucket", F.col("doc_id").alias("id1"))
-    right = bucket_rows.select("bucket", F.col("doc_id").alias("id2"))
-    return (
-        left.join(right, "bucket")
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
-
-
 def _endpoints(pairs: DataFrame) -> DataFrame:
     return (
         pairs.select(F.col("id1").alias("doc_id"))
@@ -244,16 +133,22 @@ def near_dup_init(
     text_col: str = "text",
     cfg: NearDupConfig = NearDupConfig(),
 ) -> NearDupState:
-    """Batch-build the state from an initial corpus. The edge set is by
-    construction identical to dedup.minhash_lsh_dup_pairs (same bucket
-    derivation, hot-bucket cap, and jaccard verification)."""
+    """Batch-build the state from an initial corpus. The edge set is
+    identical to dedup.minhash_lsh_dup_pairs: both run the same
+    shingle → bucket → cold-pair → packed-verify helpers."""
     shingled = _persist(_shingle_rows(docs, id_col, text_col, cfg.shingle_k))
-    buckets = _persist(_bucket_rows(shingled, cfg))
+    buckets = _persist(
+        _bucket_rows(shingled, cfg.num_perm, cfg.bands, cfg.hash_fn)
+    )
     counts = buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
     hot = counts.filter(F.col("n") > cfg.max_bucket).select("bucket")
-    cold_rows = buckets.join(F.broadcast(hot), "bucket", "left_anti")
-    edges = _verify_encoded(
-        _cold_pairs(cold_rows), shingled, cfg.jaccard_threshold, cfg.shingle_k
+    cand = _cold_pairs(buckets.join(F.broadcast(hot), "bucket", "left_anti"))
+    enc = _persist(_packed(shingled, cfg.shingle_k))
+    enc.count()  # eager cache fill: both verify sides read it
+    edges = (
+        _verify(cand, enc)
+        .filter(F.col("jaccard") >= cfg.jaccard_threshold)
+        .select("id1", "id2")
     )
     assign = connected_components(
         edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
@@ -312,7 +207,9 @@ def near_dup_delta(
     d_shingled = _persist(
         _shingle_rows(delta_docs, id_col, text_col, cfg.shingle_k)
     )
-    d_buckets = _snap(_bucket_rows(d_shingled, cfg))
+    d_buckets = _snap(
+        _bucket_rows(d_shingled, cfg.num_perm, cfg.bands, cfg.hash_fn)
+    )
     d_counts = d_buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("_dn"))
 
     # counts of TOUCHED buckets only: old rows for those buckets stream
@@ -374,16 +271,20 @@ def near_dup_delta(
         ).select(F.col(id_col), F.col(text_col))
     )
     old_shingled = _shingle_rows(old_docs, id_col, text_col, cfg.shingle_k)
-    # MATERIALIZE the (delta-bounded) verification shingle table before the
+    # MATERIALIZE the (delta-bounded) packed verification table before the
     # jaccard join. _shingle_rows' persist barrier covers only the
-    # normalized TEXT — the shingle arrays are built by an interpreted
-    # higher-order transform that token_jaccard references twice
-    # (intersect + union), so an unmaterialized table re-derives every
-    # array per reference inside the filter: measured 60s vs 0.2s for the
-    # ~1.5k involved docs at the bench's 1x corpus (notes #45, the delta
-    # twin of notes #16's CollapseProject rule).
-    ver_shingled = _snap(d_shingled.unionByName(old_shingled))
-    added = _snap(_verify(cand, ver_shingled, cfg.jaccard_threshold))
+    # normalized TEXT — the shingle and packed arrays are built by
+    # interpreted higher-order transforms that the verify references more
+    # than once, so an unmaterialized table re-derives every array per
+    # reference inside the filter: measured 60s vs 0.2s for the ~1.5k
+    # involved docs at the bench's 1x corpus (notes #45, the delta twin of
+    # notes #16's CollapseProject rule).
+    ver = _snap(_packed(d_shingled.unionByName(old_shingled), cfg.shingle_k))
+    added = _snap(
+        _verify(cand, ver)
+        .filter(F.col("jaccard") >= cfg.jaccard_threshold)
+        .select("id1", "id2")
+    )
 
     # --- retractions: old pairs whose every supporting bucket is now hot.
     # Such a pair lost a bucket that crossed the cap this batch, so both

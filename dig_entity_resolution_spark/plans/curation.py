@@ -188,6 +188,8 @@ class CurationConfig:
             raise ValueError("select_frac must be in (0, 1] or None")
         if self.select_k is not None and self.select_frac is not None:
             raise ValueError("set select_k OR select_frac, not both")
+        if self.shingle_k > 8:
+            raise ValueError(f"shingle_k must be <= 8, got {self.shingle_k}")
 
 
 class CurationPipeline:

@@ -2134,11 +2134,7 @@ def q_minhash_dedup_production(spark, sf_dir):
         "text",
         jaccard_threshold=0.3,
         hash_fn="xxhash64",
-        # encode verify back ON (late-r8): the arithmetic shingle_pack
-        # has no dictionary-build cost, so the int verify now wins even
-        # at this capped config's sparse candidates (A/B warm reps 2.98
-        # vs 2.69s at sf0.1; the r8 dictionary-encode loss is obsolete).
-        # Input already repartitioned → skip the operator rebalance.
+        # input already repartitioned → skip the operator rebalance
         rebalance=False,
     )
 

@@ -400,3 +400,20 @@ def test_decontaminate_provenance_min_hits(spark):
     }
     assert set(strict) == {1}  # doc 3 is below the bar → train-safe, no audit row
     assert strict[1].top_holdout_id == 101
+
+
+@pytest.mark.parametrize("build", ["near_dup_config", "curation_config", "lsh_pairs"])
+def test_shingle_k_above_8_rejected(spark, build):
+    """k > 8 would overflow the packed-shingle verify: configs refuse it
+    at construction and the operator before it plans anything."""
+    from dig_entity_resolution_spark.operators.dedup_incremental import NearDupConfig
+    from dig_entity_resolution_spark.plans.curation import CurationConfig
+
+    docs = spark.createDataFrame([(1, "some text")], "doc_id long, text string")
+    make = {
+        "near_dup_config": lambda: NearDupConfig(shingle_k=9),
+        "curation_config": lambda: CurationConfig(shingle_k=9),
+        "lsh_pairs": lambda: minhash_lsh_dup_pairs(docs, "doc_id", "text", shingle_k=9),
+    }[build]
+    with pytest.raises(ValueError, match="shingle_k"):
+        make()

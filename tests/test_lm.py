@@ -185,3 +185,34 @@ def test_ccnet_buckets_are_balanced_tertiles(spark):
         tail = [r["avg_logp10"] for r in rs if r["ppl_bucket"] == "tail"]
         if tail:
             assert worst_head >= max(tail) or len(rs) < 3
+
+
+def _failfast_cases():
+    from pyspark.sql import functions as F
+
+    from dig_entity_resolution_spark.functions.dsir import (
+        DsirWeights,
+        dsir_logratio_micro,
+    )
+    from dig_entity_resolution_spark.functions.lm import _array_lit
+    from dig_entity_resolution_spark.functions.quality_model import (
+        quality_logit_micro,
+    )
+
+    big = 10**20  # past the bigint range
+    text = F.lit("a b c")
+    return {
+        "malformed": lambda: _array_lit(["1", "x"]),
+        "overflow": lambda: _array_lit([1, big]),
+        "dsir": lambda: dsir_logratio_micro(text, DsirWeights(dim=2, w=(1, big))),
+        "quality": lambda: quality_logit_micro(text, [1, big], 0, 2),
+    }
+
+
+@pytest.mark.parametrize("case", ["malformed", "overflow", "dsir", "quality"])
+def test_score_table_literal_fails_fast(spark, case):
+    """A score table whose literal cannot parse as array<bigint> must
+    raise, not null every score (PERMISSIVE from_json returns NULL)."""
+    col = _failfast_cases()[case]()
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        spark.range(1).select(col.alias("v")).collect()
