@@ -61,13 +61,23 @@ def minhash_lsh_blocks(
     bands: int = 8,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """C1: MinHash/LSH blocking — band hashes as block keys."""
+    """C1: MinHash/LSH blocking — band hashes as block keys.
+
+    The round-robin exchange is the shingle barrier: CollapseProject would
+    inline a composed minhash_signature(char_shingles(...)) into each of
+    the num_perm transform lambdas (notes #16), but it never merges
+    projections across an exchange, so the signature reads the shingles
+    materialized below it. The exchange also spreads the hashing over the
+    session's cores — a records checkpoint this size scans as one
+    partition (same rule as score_pairs and _shingle_rows). The band
+    explode needs no barrier of its own (Project-under-Generate, #18).
+    """
     rows = num_perm // bands
-    sig = records.filter(F.length("norm_text") > 0).select(
-        "record_id",
-        minhash_signature(
-            char_shingles("norm_text", shingle_k), num_perm, hash_fn
-        ).alias("sig"),
+    sig = (
+        records.filter(F.length("norm_text") > 0)
+        .select("record_id", char_shingles("norm_text", shingle_k).alias("sh"))
+        .repartition(records.sparkSession.sparkContext.defaultParallelism)
+        .select("record_id", minhash_signature("sh", num_perm, hash_fn).alias("sig"))
     )
     return sig.select(
         "record_id",

@@ -3,11 +3,20 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dig_entity_resolution_spark.functions.normalize import normalize_text, tokenize
+from dig_entity_resolution_spark.functions.minhash import (
+    lsh_band_keys,
+    minhash_signature,
+)
+from dig_entity_resolution_spark.functions.normalize import (
+    char_shingles,
+    normalize_text,
+    tokenize,
+)
 from dig_entity_resolution_spark.operators.blocking import (
     all_blocks,
     candidate_pairs,
     cap_block_size,
+    minhash_lsh_blocks,
     salt_blocks,
     suppress_stop_keys,
     token_blocks,
@@ -101,6 +110,33 @@ def test_all_blocks_strategies(records):
     b4 = {r.block_key for r in mh.filter(F.col("record_id") == 4).collect()}
     b5 = {r.block_key for r in mh.filter(F.col("record_id") == 5).collect()}
     assert b4 == b5 and len(b4) > 0
+
+
+def test_minhash_lsh_blocks_shingles_once_same_keys(records):
+    """Shingles are built once, below the exchange, not inlined into each
+    of the 32 permutation lambdas (notes #16) — and the keys are the ones
+    the composed signature(char_shingles(...)) formulation gives."""
+    blocks = minhash_lsh_blocks(records)
+    plan = blocks._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("array_distinct") == 1
+    sig = records.filter(F.length("norm_text") > 0).select(
+        "record_id",
+        minhash_signature(char_shingles("norm_text", 5), 32, "xxhash64").alias("sig"),
+    )
+    composed = sig.select(
+        "record_id", F.explode(lsh_band_keys("sig", 8, 4, "xxhash64")).alias("band")
+    ).select(
+        "record_id",
+        F.concat(
+            F.col("band.band_id").cast("string"),
+            F.lit(":"),
+            F.col("band.band_hash").cast("string"),
+        ).alias("block_key"),
+        F.lit("minhash_lsh").alias("strategy"),
+    )
+    assert composed.count() == 6 * 8
+    assert blocks.exceptAll(composed).count() == 0
+    assert composed.exceptAll(blocks).count() == 0
 
 
 def test_sorted_neighborhood_window_and_multipass(spark):

@@ -10,6 +10,8 @@ from dig_entity_resolution_spark.operators.blocking import (
 from dig_entity_resolution_spark.plans.checkpoint import (
     IcebergCheckpoint,
     ParquetCheckpoint,
+    _list_data_files,
+    _local_path,
 )
 
 
@@ -272,3 +274,84 @@ def test_checkpoint_detects_foreign_file_injection(spark, tmp_path):
     # removing the foreign file restores completeness (stamped set intact)
     os.remove(os.path.join(table, "part-99999-injected-c000.snappy.parquet"))
     assert ck.is_complete("stage_f")
+
+
+def test_footer_lineage_matches_input_file_name(spark, tmp_path):
+    """Lineage row counts come from the Parquet footers of the files just
+    written. They must equal an input_file_name() groupBy over the written
+    table (keyed by the decoded path), stamp every listed file — row-less
+    part files with rows_out 0 — and keep the lineage column types."""
+    root = tmp_path / "ware house"  # space → %20 in input_file_name URIs
+    root.mkdir()
+    ck = ParquetCheckpoint(spark, str(root), "fl")
+    ids = spark.range(60).withColumnRenamed("id", "record_id")
+    cell = F.concat(F.lit("a "), (F.col("record_id") % 2).cast("string"))
+    outs = {
+        "parted": ck.write(
+            "parted", ids.withColumn("cell", cell), partition_by=["cell"]
+        ),
+        # 2 rows over 4 partitions → at least one zero-row part file
+        "sparse": ck.write("sparse", ids.limit(2).repartition(4)),
+    }
+    assert ck.counters() == {"parted": 60, "sparse": 2}
+    for stage, out in outs.items():
+        assert out.schema == ck.read(stage).schema
+        by_file = {
+            _local_path(r["f"]): r["n"]
+            for r in ck.read(stage)
+            .groupBy(F.input_file_name().alias("f"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        lin = ck.lineage(stage)
+        assert lin.dtypes == [
+            ("stage", "string"),
+            ("run_id", "string"),
+            ("partition_id", "int"),
+            ("file", "string"),
+            ("rows_out", "bigint"),
+            ("total_rows", "bigint"),
+            ("bytes", "bigint"),
+            ("ts", "timestamp"),
+        ]
+        rows = lin.collect()
+        assert sorted(r["file"] for r in rows) == _list_data_files(ck.table_path(stage))
+        assert {r["file"]: r["rows_out"] for r in rows if r["rows_out"]} == by_file
+        assert {r["total_rows"] for r in rows} == {sum(by_file.values())}
+        assert ck.is_complete(stage)
+    assert any(r["rows_out"] == 0 for r in ck.lineage("sparse").collect())
+
+
+def test_checkpoint_write_is_one_spark_job(spark, tmp_path):
+    """For a local warehouse the lineage comes from footers and the
+    read-back takes its schema from the footer, so a narrow stage write
+    runs the write job and nothing else."""
+    sc = spark.sparkContext
+    ck = ParquetCheckpoint(spark, str(tmp_path), "oj")
+    sc.setJobGroup("ck-write-one-job", "ck.write job count")
+    try:
+        ck.write("s", spark.range(100))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("ck-write-one-job")) == 1
+    assert ck.is_complete("s")
+
+
+def test_counters_skip_torn_meta_and_raise_on_corrupt(spark, tmp_path):
+    """counters() skips a _meta table still in progress or torn (no
+    _SUCCESS) but raises on an unreadable one instead of silently dropping
+    the stage from the run report."""
+    import os
+
+    ck = ParquetCheckpoint(spark, str(tmp_path), "cm")
+    ck.write("a", spark.range(10))
+    ck.write("b", spark.range(5))
+    os.remove(os.path.join(ck.meta_path("b"), "_SUCCESS"))
+    assert ck.counters() == {"a": 10}
+    meta = ck.meta_path("a")
+    part = next(f for f in sorted(os.listdir(meta)) if f.endswith(".parquet"))
+    with open(os.path.join(meta, part), "r+b") as f:
+        f.truncate(os.path.getsize(os.path.join(meta, part)) - 7)
+    with pytest.raises(Exception):
+        ck.counters()
+    assert not ck.is_complete("a")
