@@ -21,13 +21,13 @@ from pyspark.sql import functions as F
 from .hashing import md5_long
 
 
-def _perm_hash(shingle: Column, perm: int, hash_fn: str) -> Column:
+def _perm_hash(shingle: Column, perm: Column, hash_fn: str) -> Column:
     if hash_fn == "xxhash64":
         # multi-arg xxhash64 mixes the seed without building a new string
         # per (perm, shingle) — ~30% cheaper than concat+hash
-        return F.xxhash64(F.lit(perm), shingle)
+        return F.xxhash64(perm, shingle)
     if hash_fn == "md5":
-        return md5_long(F.concat(F.lit(f"{perm}:"), shingle))
+        return md5_long(F.concat(perm.cast("string"), F.lit(":"), shingle))
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
 
 
@@ -36,20 +36,22 @@ def minhash_signature(
 ) -> Column:
     """array<long> of num_perm min-hashes over a shingle array. (B10)
 
-    Empty shingle arrays produce an array of NULLs (array_min of empty);
-    callers should filter empty docs first.
+    One transform over the permutation ids, not num_perm unrolled
+    copies: the Column tree, its analysis and its codegen stay the same
+    size whatever num_perm is (notes #63). Empty shingle arrays produce
+    an array of NULLs (array_min of empty); callers should filter empty
+    docs first.
     """
     c = F.col(shingles_col) if isinstance(shingles_col, str) else shingles_col
-
-    def _hash_fn_for(i: int):
-        # NOTE: must return a ONE-parameter lambda — a two-parameter lambda
-        # (e.g. `lambda s, i=i: ...`) is treated by F.transform as an
-        # (element, index) function and the array index silently replaces
-        # the seed.
-        return lambda s: _perm_hash(s, i, hash_fn)
-
-    mins = [F.array_min(F.transform(c, _hash_fn_for(i))) for i in range(num_perm)]
-    return F.array(*mins)
+    if num_perm < 1:
+        # sequence(0, -1) would count DOWN to a two-element array
+        raise ValueError(f"num_perm must be >= 1, got {num_perm}")
+    # NOTE: every lambda here takes ONE parameter — a two-parameter lambda
+    # is treated by F.transform as (element, index) (notes #6)
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_perm - 1)),
+        lambda p: F.array_min(F.transform(c, lambda s: _perm_hash(s, p, hash_fn))),
+    )
 
 
 def lsh_band_keys(
@@ -58,7 +60,10 @@ def lsh_band_keys(
     """array<struct<band_id:int, band_hash:long>> from a signature. (B11)
 
     band_hash = hash over the concatenated r values of the band, prefixed
-    with the band id so different bands never collide.
+    with the band id so different bands never collide. Unrolled on
+    purpose: referencing the signature once per band keeps CollapseProject
+    from inlining a signature projection below into every band (notes
+    #63).
     """
     c = F.col(sig_col) if isinstance(sig_col, str) else sig_col
     out = []

@@ -3,9 +3,17 @@
 Implements the alternating large-star/small-star connected-components
 algorithm of Kiveris et al., "Connected Components in MapReduce and Beyond"
 (SoCC 2014) — O(log^2 n) rounds, each round two groupBy-join passes over the
-edge table. Pure DataFrame ops; each round is localCheckpoint'ed to truncate
-Catalyst lineage (the classic iterative-Spark requirement — without it the
-plan grows exponentially and analysis stalls around round 10).
+edge table. Pure DataFrame ops; each round is cut (localCheckpoint, or a
+durable stage table) to truncate Catalyst lineage (the classic
+iterative-Spark requirement — without it the plan grows exponentially and
+analysis stalls around round 10).
+
+A graph with integer ids small enough to broadcast skips the rounds: the
+init cut counts its canonical edges, and when they fit they come to the
+driver through Arrow and a numpy min-label / pointer-jumping pass labels
+them (_driver_labels). At the sizes the engine meets in one batch
+(thousands of edges) the rounds cost fixed per-job overhead, not data —
+44 Spark jobs for a 50-edge graph (notes #65).
 
 Also provides min-label propagation (cc_propagate) as an independent
 implementation used to cross-check results in tests.
@@ -13,8 +21,11 @@ implementation used to cross-check results in tests.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def canonical_edges(matches: DataFrame, c1: str = "id1", c2: str = "id2") -> DataFrame:
@@ -74,6 +85,76 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
+def _driver_bound(edges: DataFrame) -> int:
+    """How many canonical edges the driver finish may collect: the
+    session's broadcast threshold over the edge row width, two 8-byte ids
+    (notes #65). A threshold of -1 (broadcasts off) or an id that is not
+    an integer (the 128-bit struct<hi,lo> record id) gives -1, which
+    keeps the round loop."""
+    if not isinstance(edges.schema["src"].dataType, (T.LongType, T.IntegerType)):
+        return -1
+    spark = edges.sparkSession
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return int(threshold) // 16 if threshold > 0 else -1
+
+
+def min_labels(src: np.ndarray, dst: np.ndarray, n: int) -> tuple[np.ndarray, int]:
+    """Component labels for nodes 0..n-1 (label = min node index in the
+    component) and the number of passes that changed a label.
+
+    Each pass hooks every endpoint, AND the node its label names, to the
+    smallest label across the edge (np.minimum.at, against the labels of
+    the previous pass), then takes one pointer-jump step. A label only
+    ever names a node of the same component and never rises, so at the
+    fixpoint every edge joins equal labels and the component minimum,
+    which is its own label, labels them all. The jump halves path
+    lengths: a chain of n nodes settles in ~log2(n) passes. Hooking the
+    labelled node too carries a small label up a whole label tree in one
+    pass: a random 1M-node, 1M-edge graph takes 12 passes, where
+    hooking endpoints alone took 1,162 (notes #65)."""
+    lab = np.arange(n)
+    passes = 0
+    while True:
+        new = lab.copy()
+        ls, ld = lab[src], lab[dst]
+        np.minimum.at(new, src, ld)
+        np.minimum.at(new, dst, ls)
+        np.minimum.at(new, ls, ld)
+        np.minimum.at(new, ld, ls)
+        new = new[new]
+        if np.array_equal(new, lab):
+            return lab, passes
+        lab = new
+        passes += 1
+
+
+def _driver_labels(cur: DataFrame, stats: dict | None) -> DataFrame:
+    """(record_id, cluster_id) of the canonical edge table `cur`, which
+    the caller has sized against _driver_bound, labelled on the driver."""
+    tbl = cur.toArrow()
+    typ = tbl.schema.field("src").type
+    ids, inv = np.unique(
+        np.concatenate(
+            [tbl.column(c).to_numpy().astype(np.int64) for c in ("src", "dst")]
+        ),
+        return_inverse=True,
+    )
+    m = tbl.num_rows
+    lab, passes = min_labels(inv[:m], inv[m:], len(ids))
+    if stats is not None:
+        stats["rounds"] = passes
+        stats["last_round"] = -1
+    id_type = cur.schema["src"].dataType
+    schema = T.StructType(
+        [T.StructField("record_id", id_type), T.StructField("cluster_id", id_type)]
+    )
+    out = pa.table(
+        [pa.array(ids, type=typ), pa.array(ids[lab], type=typ)],
+        names=["record_id", "cluster_id"],
+    )
+    return cur.sparkSession.createDataFrame(out, schema=schema)
+
+
 def connected_components(
     edges: DataFrame,
     max_rounds: int = 50,
@@ -89,6 +170,12 @@ def connected_components(
     Convergence: stop when the canonical edge set's (count, hash-sum)
     fingerprint is stable across a full large+small round.
 
+    Driver finish: with ckpt=None, a canonical edge table of at most
+    _driver_bound(edges) rows (the broadcast threshold over the edge row
+    width) is labelled on the driver by min_labels instead — same min-id
+    labels, no rounds. Larger graphs, non-integer ids (id_bits=128) and
+    durable runs keep the round loop.
+
     Lineage truncation (VERDICT r1 item 8): each round must cut the
     Catalyst plan or analysis stalls ~round 10. Two modes:
       * ckpt=None (default) — localCheckpoint. Fast, but NOT fault-
@@ -103,7 +190,8 @@ def connected_components(
     When `stats` (a dict) is passed, it is filled with {"rounds": number of
     large+small rounds actually executed by THIS call, "last_round": index
     of the final round table} — the warm-start tests assert a measured
-    round-count drop from it.
+    round-count drop from it. After a driver finish "rounds" counts the
+    min_labels passes that changed a label and "last_round" is -1.
     """
 
     def _cut(name: str, df: DataFrame) -> DataFrame:
@@ -135,9 +223,17 @@ def connected_components(
             cur = ckpt.read(f"{stage_prefix}_round{done - 1}")
             start_round = done
     if cur is None:
-        cur = _cut(
-            f"{stage_prefix}_init", canonical_edges(edges, "src", "dst")
-        )
+        canon = canonical_edges(edges, "src", "dst")
+        bound = _driver_bound(canon) if ckpt is None else -1
+        if bound < 0:
+            cur = _cut(f"{stage_prefix}_init", canon)
+        else:
+            # the init cut, filled lazily by an RDD count: the size check
+            # IS the fill (one job, as in an eager cut) and moves no rows
+            # to the driver, so a graph over the bound costs nothing extra
+            cur = canon.localCheckpoint(eager=False)
+            if cur._jdf.queryExecution().toRdd().count() <= bound:
+                return _driver_labels(cur, stats)
     # resume note: prev_fp from the resumed table is exactly the convergence
     # test — if the next round reproduces it, the closure was already done
     prev_fp = _fingerprint(cur) if start_round > 0 else None

@@ -73,7 +73,11 @@ def exact_dup_groups(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def _shingle_rows(
     docs: DataFrame, id_col: str, text_col: str, k: int, rebalance: bool = True
 ) -> DataFrame:
-    """(doc_id, shingles) for every doc with at least one shingle.
+    """(doc_id, shingles) for every doc. char_shingles gives every text
+    at least one shingle (a text shorter than k is its own shingle), so
+    no size filter is needed — and one would cost a second shingling per
+    doc, because the optimizer pushes it below the shingle projection
+    with char_shingles copied into it.
 
     The normalized text is persisted before shingling: CollapseProject
     inlines expressions into transform() lambdas, so a composed
@@ -100,24 +104,52 @@ def _shingle_rows(
     )
     if rebalance:
         normed = normed.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return (
-        _persist(normed)
-        .select("doc_id", char_shingles("_norm", k).alias("shingles"))
-        .filter(F.size("shingles") > 0)
+    return _persist(normed).select(
+        "doc_id", char_shingles("_norm", k).alias("shingles")
     )
 
 
-def _bucket_rows(
-    shingled: DataFrame, num_perm: int, bands: int, hash_fn: str
+def _packed(shingled: DataFrame, k: int, *extra) -> DataFrame:
+    """(doc_id, *extra, _ish, _sz): each doc's distinct shingle set packed
+    to longs (shingle_pack, a per-row projection) plus its size.
+    Intersecting STRING arrays per candidate pair dominated the verify
+    (measured 20.5s of a 23s sf0.1 query at 1.1M candidates); the pack
+    is an injection, so |A∩B| is unchanged while array_intersect stops
+    hashing strings."""
+    return shingled.select(
+        "doc_id",
+        *extra,
+        shingle_pack("shingles", k).alias("_ish"),
+        F.size("shingles").alias("_sz"),
+    )
+
+
+def _signed(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    num_perm: int,
+    hash_fn: str,
+    rebalance: bool = True,
 ) -> DataFrame:
+    """(doc_id, sig, _ish, _sz), persisted: the one table the bucket
+    explode and both verify sides read, so one cache fill serves the
+    whole near-dup chain. The projection references the shingles three
+    times, so CollapseProject keeps it above the shingle projection and
+    each doc is shingled once (#16)."""
+    shingled = _shingle_rows(docs, id_col, text_col, k, rebalance)
+    return _persist(
+        _packed(shingled, k, minhash_signature("shingles", num_perm, hash_fn).alias("sig"))
+    )
+
+
+def _bucket_rows(signed: DataFrame, num_perm: int, bands: int, hash_fn: str) -> DataFrame:
     """(doc_id, bucket): one row per LSH band of each doc's signature.
     Carries ONLY ids — the wide shingle arrays must not flow through the
     bucket self-join + dropDuplicates shuffles (measured 14x slower when
     they do); the verify joins packed shingles back once per pair."""
-    sig = shingled.select(
-        "doc_id", minhash_signature("shingles", num_perm, hash_fn).alias("sig")
-    )
-    return sig.select(
+    return signed.select(
         "doc_id",
         F.explode(lsh_band_keys("sig", bands, num_perm // bands, hash_fn)).alias(
             "band"
@@ -140,20 +172,6 @@ def _cold_pairs(bucket_rows: DataFrame) -> DataFrame:
         .filter(F.col("id1") < F.col("id2"))
         .select("id1", "id2")
         .dropDuplicates(["id1", "id2"])
-    )
-
-
-def _packed(shingled: DataFrame, k: int) -> DataFrame:
-    """(doc_id, _ish, _sz): each doc's distinct shingle set packed to
-    longs (shingle_pack, a per-row projection) plus its size.
-    Intersecting STRING arrays per candidate pair dominated the verify
-    (measured 20.5s of a 23s sf0.1 query at 1.1M candidates); the pack
-    is an injection, so |A∩B| is unchanged while array_intersect stops
-    hashing strings."""
-    return shingled.select(
-        "doc_id",
-        shingle_pack("shingles", k).alias("_ish"),
-        F.size("shingles").alias("_sz"),
     )
 
 
@@ -194,24 +212,12 @@ def minhash_lsh_dup_pairs(
     shingle_k must be ≤ 8 (ValueError otherwise). rebalance: see
     _shingle_rows.
     """
-    # persist: `base` feeds both bucketing and the packed verify table, and
-    # `buckets` feeds the hot-key agg plus both join sides — without
-    # persistence Catalyst re-evaluates the num_perm-hash signature per
-    # branch (measured 5x the work). At pipeline scale the signatures are a
-    # checkpointed stage instead; inside this one-shot operator
-    # MEMORY_AND_DISK is the right tool.
-    base = _persist(_shingle_rows(docs, id_col, text_col, shingle_k, rebalance))
-    buckets = _persist(_bucket_rows(base, num_perm, bands, hash_fn))
-    # Materialize the persisted intermediates EAGERLY, in dependency
-    # order. The final plan fans out into several branches over `base`
-    # and `buckets` (hot-key agg + both self-join sides + both verify
-    # hydrations); when the caches are still cold at execution time,
-    # concurrent stages race to fill them and each recomputes the
-    # num_perm-hash signature chain (measured 24-30s vs 21s at the 10x
-    # bench corpus; worst observed in-pipeline wall 76s). Small count
-    # jobs serialize the cache fill once.
-    base.count()
-    buckets.count()
+    signed = _signed(docs, id_col, text_col, shingle_k, num_perm, hash_fn, rebalance)
+    # ONE eager fill, before the plan fans out over `signed` (hot-key agg,
+    # both self-join sides, both verify hydrations): the signature chain
+    # is computed in one named job ahead of every consumer (notes #64)
+    signed.count()
+    buckets = _bucket_rows(signed, num_perm, bands, hash_fn)
     hot = (
         buckets.groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -219,9 +225,7 @@ def minhash_lsh_dup_pairs(
         .select("bucket")
     )
     cand = _cold_pairs(buckets.join(F.broadcast(hot), "bucket", "left_anti"))
-    enc = _persist(_packed(base, shingle_k))
-    enc.count()  # same eager-fill rule: enc feeds both verify sides
-    return _verify(cand, enc).filter(F.col("jaccard") >= jaccard_threshold)
+    return _verify(cand, signed).filter(F.col("jaccard") >= jaccard_threshold)
 
 
 def simhash_dup_pairs(

@@ -63,7 +63,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cluster import connected_components
-from .dedup import _bucket_rows, _cold_pairs, _packed, _persist, _shingle_rows, _verify
+from .dedup import _bucket_rows, _cold_pairs, _packed, _shingle_rows, _signed, _verify
 
 
 @dataclass(frozen=True)
@@ -136,29 +136,25 @@ def near_dup_init(
     """Batch-build the state from an initial corpus. The edge set is
     identical to dedup.minhash_lsh_dup_pairs: both run the same
     shingle → bucket → cold-pair → packed-verify helpers."""
-    shingled = _persist(_shingle_rows(docs, id_col, text_col, cfg.shingle_k))
-    buckets = _persist(
-        _bucket_rows(shingled, cfg.num_perm, cfg.bands, cfg.hash_fn)
+    signed = _signed(
+        docs, id_col, text_col, cfg.shingle_k, cfg.num_perm, cfg.hash_fn
     )
-    counts = buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
-    hot = counts.filter(F.col("n") > cfg.max_bucket).select("bucket")
+    signed.count()  # the one eager fill (see minhash_lsh_dup_pairs)
+    # the bucket rows are a state table anyway: snap them first, so the
+    # hot-key agg, the self-join and the state all read one leaf
+    buckets = _snap(_bucket_rows(signed, cfg.num_perm, cfg.bands, cfg.hash_fn))
+    counts = _snap(buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")))
+    hot = _snap(counts.filter(F.col("n") > cfg.max_bucket).select("bucket"))
     cand = _cold_pairs(buckets.join(F.broadcast(hot), "bucket", "left_anti"))
-    enc = _persist(_packed(shingled, cfg.shingle_k))
-    enc.count()  # eager cache fill: both verify sides read it
-    edges = (
-        _verify(cand, enc)
+    edges = _snap(
+        _verify(cand, signed)
         .filter(F.col("jaccard") >= cfg.jaccard_threshold)
         .select("id1", "id2")
     )
-    assign = connected_components(
-        edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    ).select(F.col("record_id").alias("doc_id"), "cluster_id")
-    buckets, counts, hot, edges, assign = (
-        _snap(buckets),
-        _snap(counts),
-        _snap(hot),
-        _snap(edges),
-        _snap(assign),
+    assign = _snap(
+        connected_components(
+            edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
+        ).select(F.col("record_id").alias("doc_id"), "cluster_id")
     )
     # docs is a state table like the others and MUST be a snapped leaf:
     # left lazy, every later action that scans state.docs (delta's
@@ -204,11 +200,12 @@ def near_dup_delta(
                 "pipeline's latest_wins delta, not LSH-dedup maintenance)"
             )
 
-    d_shingled = _persist(
-        _shingle_rows(delta_docs, id_col, text_col, cfg.shingle_k)
+    # the d_buckets snap is the first action over d_signed and fills it
+    d_signed = _signed(
+        delta_docs, id_col, text_col, cfg.shingle_k, cfg.num_perm, cfg.hash_fn
     )
     d_buckets = _snap(
-        _bucket_rows(d_shingled, cfg.num_perm, cfg.bands, cfg.hash_fn)
+        _bucket_rows(d_signed, cfg.num_perm, cfg.bands, cfg.hash_fn)
     )
     d_counts = d_buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("_dn"))
 
@@ -258,12 +255,12 @@ def near_dup_delta(
     # recomputed restricted to the candidate membership (bounded by the
     # touched buckets, not the corpus). The involved-docs prune is
     # MATERIALIZED before any shingle expression exists: when the prune
-    # and the shingling live in one plan, the optimizer can push
-    # _shingle_rows' size(shingles)>0 filter below the semi-join with the
-    # normalize regex inlined per shingle position — the notes-#16 O(L²)
-    # blowup over the WHOLE corpus scan (measured 40s vs 1.8s at the 5k
-    # bench when the lean-checkpoint plan shape tripped it, r7). The snap
-    # is delta-bounded (involved endpoints only), so this stays O(delta).
+    # and the shingling live in one plan, the optimizer can push a filter
+    # over the shingles below the semi-join with the normalize regex
+    # inlined per shingle position — the notes-#16 O(L²) blowup over the
+    # WHOLE corpus scan (measured 40s vs 1.8s at the 5k bench, notes
+    # #52). The snap is delta-bounded (involved endpoints only), so this
+    # stays O(delta).
     old_involved = _endpoints(cand).join(delta_ids, "doc_id", "left_anti")
     old_docs = _snap(
         state.docs.join(
@@ -279,7 +276,11 @@ def near_dup_delta(
     # reference inside the filter: measured 60s vs 0.2s for the ~1.5k
     # involved docs at the bench's 1x corpus (notes #45, the delta twin of
     # notes #16's CollapseProject rule).
-    ver = _snap(_packed(d_shingled.unionByName(old_shingled), cfg.shingle_k))
+    ver = _snap(
+        d_signed.select("doc_id", "_ish", "_sz").unionByName(
+            _packed(old_shingled, cfg.shingle_k)
+        )
+    )
     added = _snap(
         _verify(cand, ver)
         .filter(F.col("jaccard") >= cfg.jaccard_threshold)

@@ -3,6 +3,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from dig_entity_resolution_spark.functions.hashing import md5_long
 from dig_entity_resolution_spark.functions.minhash import (
     lsh_band_keys,
     minhash_signature,
@@ -137,6 +138,59 @@ def test_minhash_lsh_blocks_shingles_once_same_keys(records):
     assert composed.count() == 6 * 8
     assert blocks.exceptAll(composed).count() == 0
     assert composed.exceptAll(blocks).count() == 0
+
+
+def _unrolled_signature(c, num_perm, hash_fn):
+    """Reference kernel: one array_min(transform(...)) per permutation."""
+
+    def perm(i):
+        if hash_fn == "xxhash64":
+            return lambda s: F.xxhash64(F.lit(i), s)
+        return lambda s: md5_long(F.concat(F.lit(f"{i}:"), s))
+
+    return F.array(*[F.array_min(F.transform(F.col(c), perm(i))) for i in range(num_perm)])
+
+
+def _lambda_functions(df) -> int:
+    """LambdaFunction nodes in the analyzed plan's expressions."""
+    plan = df._jdf.queryExecution().analyzed()
+    exprs = plan.expressions()
+    todo = [exprs.apply(i) for i in range(exprs.size())]
+    n = 0
+    while todo:
+        e = todo.pop()
+        n += e.getClass().getSimpleName() == "LambdaFunction"
+        ch = e.children()
+        todo.extend(ch.apply(i) for i in range(ch.size()))
+    return n
+
+
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+@pytest.mark.parametrize("num_perm", [8, 32])
+def test_signature_equals_unrolled_reference(records, hash_fn, num_perm):
+    """One transform over the permutation ids gives the rows and the
+    schema, nullability included, of the unrolled kernel (band keys
+    included) — an empty shingle array too, whose signature is all NULLs
+    — with two lambdas however many permutations there are."""
+    sh = records.select(
+        "record_id", char_shingles("norm_text", 5).alias("sh")
+    ).unionByName(
+        records.sparkSession.createDataFrame([(99, [])], "record_id long, sh array<string>")
+    ).localCheckpoint()
+    bands, rows = num_perm // 4, 4
+    new = sh.select(
+        "record_id", minhash_signature("sh", num_perm, hash_fn).alias("sig")
+    ).select("record_id", "sig", lsh_band_keys("sig", bands, rows, hash_fn).alias("b"))
+    ref = sh.select(
+        "record_id", _unrolled_signature("sh", num_perm, hash_fn).alias("sig")
+    ).select("record_id", "sig", lsh_band_keys("sig", bands, rows, hash_fn).alias("b"))
+    assert new.schema == ref.schema
+    assert new.count() == 7
+    assert new.exceptAll(ref).count() == 0
+    assert ref.exceptAll(new).count() == 0
+    empty = new.filter("record_id = 99").first()
+    assert empty.sig == [None] * num_perm
+    assert _lambda_functions(sh.select(minhash_signature("sh", num_perm, hash_fn))) == 2
 
 
 def test_sorted_neighborhood_window_and_multipass(spark):

@@ -2,13 +2,17 @@
 
 from __future__ import annotations
 
+import contextlib
 import random
 
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from dig_entity_resolution_spark.operators.cluster import (
     cc_propagate,
     connected_components,
+    min_labels,
 )
 
 
@@ -204,3 +208,150 @@ def test_cc_warm_start_from_star_edges_converges_faster(spark):
         warm_stats,
         scratch_stats,
     )
+
+
+@contextlib.contextmanager
+def _broadcast_off(spark, threshold="-1"):
+    """autoBroadcastJoinThreshold=-1: the driver-finish bound is -1, so
+    connected_components keeps the round loop. Another threshold sets the
+    bound to threshold // 16 edges."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, threshold)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _labels(df):
+    return {r.record_id: r.cluster_id for r in df.collect()}
+
+
+def _messy(edges, seed):
+    """The same graph with reversed, duplicated and self-loop edges."""
+    rng = random.Random(seed)
+    out = [(b, a) if rng.random() < 0.5 else (a, b) for a, b in edges]
+    out += rng.sample(out, len(out) // 4)
+    out += [(a, a) for a, _ in rng.sample(edges, 3)]
+    rng.shuffle(out)
+    return out
+
+
+def test_min_labels_matches_union_find():
+    """The numpy kernel alone: min-id labels on random graphs, and pass
+    counts that halve a chain (pointer jumping), not walk it, and stay
+    small on a sparse random graph (hooking endpoints alone took 302)."""
+    for seed in range(200):
+        rng = np.random.default_rng(seed)
+        n = int(rng.integers(1, 60))
+        m = int(rng.integers(0, 80))
+        src, dst = rng.integers(0, n, m), rng.integers(0, n, m)
+        lab, _ = min_labels(src, dst, n)
+        touched = sorted(set(src.tolist()) | set(dst.tolist()))
+        expect = _union_find(list(zip(src.tolist(), dst.tolist())), touched)
+        assert {v: int(lab[v]) for v in touched} == expect
+    n = 200_000
+    lab, passes = min_labels(np.arange(n - 1), np.arange(1, n), n)
+    assert (lab == 0).all() and passes <= 20
+    rng = np.random.default_rng(0)
+    src, dst = np.arange(100_000), rng.integers(0, 100_000, 100_000)
+    lab, passes = min_labels(src, dst, 100_000)
+    expect = _union_find(list(zip(src.tolist(), dst.tolist())), range(100_000))
+    assert passes <= 20 and lab.tolist() == [expect[v] for v in range(100_000)]
+    assert min_labels(np.array([], int), np.array([], int), 0)[1] == 0
+
+
+@pytest.mark.parametrize("seed", [5, 6])
+def test_driver_finish_equals_cc_propagate(spark, seed):
+    nodes, edges = _random_graph(seed, n_nodes=50, n_edges=40)
+    edf = spark.createDataFrame(_messy(edges, seed), ["src", "dst"])
+    stats: dict = {}
+    got = _labels(connected_components(edf, stats=stats))
+    assert stats["last_round"] == -1  # finished on the driver
+    assert got == _labels(cc_propagate(edf))
+
+
+def test_driver_finish_long_chain_equals_cc_propagate(spark):
+    chain = [(i, i + 1) for i in range(1, 30)]
+    edf = spark.createDataFrame(_messy(chain, 1), ["src", "dst"])
+    stats: dict = {}
+    got = _labels(connected_components(edf, stats=stats))
+    assert stats["last_round"] == -1 and 1 <= stats["rounds"] <= 6
+    assert got == _labels(cc_propagate(edf)) == {i: 1 for i in range(1, 31)}
+
+
+def test_driver_finish_empty(spark):
+    edf = spark.createDataFrame([(3, 3)], "src long, dst long")
+    out = connected_components(edf)
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<record_id:bigint,cluster_id:bigint>"
+
+
+def test_broadcast_off_keeps_round_loop(spark):
+    nodes, edges = _random_graph(7, n_nodes=50, n_edges=45)
+    edf = spark.createDataFrame(_messy(edges, 7), ["src", "dst"])
+    finished = _labels(connected_components(edf))
+    stats: dict = {}
+    with _broadcast_off(spark):
+        looped = _labels(connected_components(edf, stats=stats))
+    assert stats["last_round"] >= 0  # the round loop ran
+    assert looped == finished
+
+
+def test_over_bound_graph_keeps_round_loop(spark):
+    """A graph one edge over the bound is sized by the init cut's count
+    and runs the round loop, with the driver finish's labels."""
+    nodes, edges = _random_graph(9, n_nodes=30, n_edges=20)
+    edf = spark.createDataFrame(edges, ["src", "dst"])
+    n = len({(min(a, b), max(a, b)) for a, b in edges if a != b})
+    finished = _labels(connected_components(edf))
+    stats: dict = {}
+    with _broadcast_off(spark, str(16 * (n - 1))):
+        looped = _labels(connected_components(edf, stats=stats))
+    assert stats["last_round"] >= 0  # the round loop ran
+    assert looped == finished
+    stats = {}
+    with _broadcast_off(spark, str(16 * n)):
+        assert _labels(connected_components(edf, stats=stats)) == finished
+    assert stats["last_round"] == -1  # exactly at the bound: driver finish
+
+
+def test_struct_ids_same_labels_as_round_loop(spark):
+    """128-bit struct<hi,lo> ids (ERConfig(id_bits=128)) fall back to the
+    round loop, whatever the broadcast threshold, with the id type kept."""
+    nodes, edges = _random_graph(8, n_nodes=40, n_edges=30)
+    edf = spark.createDataFrame(_messy(edges, 8), ["src", "dst"])
+
+    def wide(c):
+        # lo falls as hi rises, so a lo-first ordering would pick other minima
+        return F.struct((F.col(c) % 7).alias("hi"), (-F.col(c)).alias("lo")).alias(c)
+
+    s128 = edf.select(wide("src"), wide("dst"))
+
+    def rows(df):
+        return sorted((tuple(r.record_id), tuple(r.cluster_id)) for r in df.collect())
+
+    stats: dict = {}
+    out = connected_components(s128, stats=stats)
+    assert stats["last_round"] >= 0  # the round loop ran
+    assert out.schema["record_id"].dataType == s128.schema["src"].dataType
+    finished = rows(out)
+    with _broadcast_off(spark):
+        looped = rows(connected_components(s128))
+    assert finished == looped and len(finished) == len({x for e in edges for x in e})
+
+
+def test_small_graph_is_at_most_three_spark_jobs(spark):
+    """The init cut (its shuffle, then the fill that counts it) and one
+    Arrow collect of the edges: <= 3 Spark jobs where the round loop ran
+    ~20 for a two-round closure."""
+    sc = spark.sparkContext
+    edf = spark.createDataFrame(_messy(_random_graph(3)[1], 3), ["src", "dst"])
+    sc.setJobGroup("cc-small-jobs", "connected_components job count")
+    try:
+        n = len(connected_components(edf).collect())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n > 0
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-small-jobs")) <= 3

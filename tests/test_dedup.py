@@ -417,3 +417,100 @@ def test_shingle_k_above_8_rejected(spark, build):
     }[build]
     with pytest.raises(ValueError, match="shingle_k"):
         make()
+
+
+def test_near_dup_chain_is_one_cache_one_count(docs, monkeypatch):
+    """The shared near-dup core persists one signed table (plus the
+    normalized-text barrier), shingles each doc once for it, and fills it
+    with exactly one eager count(), in the batch operator and in
+    near_dup_init alike."""
+    from dig_entity_resolution_spark.operators import dedup
+    from dig_entity_resolution_spark.operators.dedup_incremental import near_dup_init
+
+    cls = type(docs)
+    real_count = cls.count
+    calls = []
+
+    def counting(self):
+        calls.append(self)
+        return real_count(self)
+
+    monkeypatch.setattr(cls, "count", counting)
+    dedup.release_caches()
+    minhash_lsh_dup_pairs(docs, "doc_id", "text")
+    assert len(calls) == 1
+    assert len(dedup._LIVE_CACHES) == 2
+    assert dedup._LIVE_CACHES[-1].columns == ["doc_id", "sig", "_ish", "_sz"]
+    dedup.release_caches()
+    signed = dedup._signed(docs, "doc_id", "text", 5, 32, "xxhash64")
+    plan = signed._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("array_distinct") == 1  # before the fill: one plan
+    calls.clear()
+    near_dup_init(docs)
+    assert len(calls) == 1
+    monkeypatch.undo()
+    dedup.release_caches()
+
+
+def _reference_kept(docs):
+    """An independent, uncached formulation of near_dup_corpus at its
+    defaults: composed signature, band self-join, string-shingle Jaccard
+    verify, min-label propagation, min-id survivors."""
+    from dig_entity_resolution_spark.functions.minhash import (
+        lsh_band_keys,
+        minhash_signature,
+    )
+    from dig_entity_resolution_spark.functions.normalize import (
+        char_shingles,
+        normalize_text,
+    )
+    from dig_entity_resolution_spark.operators.cluster import cc_propagate
+
+    sh = (
+        docs.select("doc_id", normalize_text("text").alias("n"))
+        .localCheckpoint()
+        .select("doc_id", char_shingles("n", 5).alias("sh"))
+        .localCheckpoint()
+    )
+    rows = sh.select(
+        "doc_id", F.explode(lsh_band_keys(minhash_signature("sh"), 8, 4)).alias("b")
+    ).select("doc_id", F.concat_ws(":", "b.band_id", "b.band_hash").alias("bucket"))
+    hot = rows.groupBy("bucket").count().filter("count > 200")
+    rows = rows.join(hot, "bucket", "left_anti")
+    cand = (
+        rows.toDF("bucket", "id1")
+        .join(rows.toDF("bucket", "id2"), "bucket")
+        .filter("id1 < id2")
+        .select("id1", "id2")
+        .distinct()
+    )
+    inter = F.size(F.array_intersect("s1", "s2"))
+    edges = (
+        cand.join(sh.toDF("id1", "s1"), "id1")
+        .join(sh.toDF("id2", "s2"), "id2")
+        .filter(inter / F.size(F.array_union("s1", "s2")) >= 0.5)
+        .select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
+    )
+    labels = {r.record_id: r.cluster_id for r in cc_propagate(edges).collect()}
+    sizes = {}
+    for c in labels.values():
+        sizes[c] = sizes.get(c, 0) + 1
+    return {
+        (d, d, sizes.get(d, 1))
+        for d in (r.doc_id for r in docs.select("doc_id").collect())
+        if labels.get(d, d) == d
+    }
+
+
+def test_near_dup_corpus_documents_equal_reference(spark):
+    from dig_entity_resolution_spark.operators.dedup import near_dup_corpus, release_caches
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").repartition(4)
+    got = [
+        (r.doc_id, r.dup_cluster_id, r.n_merged)
+        for r in near_dup_corpus(docs, "doc_id", "text", rebalance=False).collect()
+    ]
+    release_caches()
+    want = _reference_kept(docs)
+    assert len(want) < 500  # the fixture holds near-dups
+    assert len(got) == len(set(got)) and set(got) == want
