@@ -72,11 +72,6 @@ def md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def md5_long_seeded(col: Column, seed: int) -> Column:
-    """Seeded variant used as the i-th MinHash permutation: md5(seed||':'||x)."""
-    return md5_long(F.concat(F.lit(f"{seed}:"), col))
-
-
 def salt_col(id_col: Column | str, n_salts: int) -> Column:
     """Deterministic salt in [0, n_salts) from a record id."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col

@@ -95,9 +95,3 @@ def prefix_key(norm_col: Column | str, n: int = 6) -> Column:
     """First-n-characters blocking key. (B7)"""
     c = F.col(norm_col) if isinstance(norm_col, str) else norm_col
     return F.substring(c, 1, n)
-
-
-def first_token(tokens_col: Column | str) -> Column:
-    """First-token blocking key. (B7 variant)"""
-    c = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    return F.element_at(c, 1)

@@ -30,22 +30,6 @@ from pyspark.sql.types import DoubleType
 # ---------------------------------------------------------------------------
 
 
-def lev_similarity_native(a: Column | str, b: Column | str) -> Column:
-    """Normalized Levenshtein similarity 1 - lev/max(len); both empty → 1,
-    via the JVM levenshtein expression. Kept as the reference twin of the
-    batched Myers kernel below (tests assert exact equality); the r8
-    default `lev_similarity` routes through the kernel because the JVM
-    O(n·m) cell DP dominated the scoring stage (18.1s of a 33s wall at
-    4M pairs × ~117-char texts) while Myers does the same DP in
-    O(ceil(n/64)·m) word steps."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    mx = F.greatest(F.length(ca), F.length(cb))
-    return F.when(mx == 0, F.lit(1.0)).otherwise(
-        1.0 - F.levenshtein(ca, cb) / mx.cast("double")
-    )
-
-
 def lev_similarity(a: Column | str, b: Column | str) -> Column:
     """Normalized Levenshtein similarity 1 - lev/max(len); both empty → 1.
     (D2) Batched bit-parallel Myers kernel (exact; see levenshtein_batch)."""

@@ -93,19 +93,6 @@ def quality_features(text_col: Column | str) -> dict[str, Column]:
     }
 
 
-def quality_score(text_col: Column | str) -> Column:
-    """Blend of quality signals in [0,1]: rewards mid-length docs with low
-    punctuation/digit noise and some stopword mass (prose-likeness)."""
-    q = quality_features(text_col)
-    len_score = F.least(q["n_ws_tokens"] / F.lit(50.0), F.lit(1.0))
-    return (
-        0.4 * len_score
-        + 0.2 * (1.0 - F.least(q["punct_ratio"] * 4, F.lit(1.0)))
-        + 0.2 * (1.0 - F.least(q["digit_ratio"] * 4, F.lit(1.0)))
-        + 0.2 * F.least(q["stopword_ratio"] * 5, F.lit(1.0))
-    )
-
-
 def bottomk_fingerprint(shingles_col: Column | str, k: int = 8) -> Column:
     """Document fingerprint: bottom-k of md5-hashed shingles (a k-mins
     sketch — order-invariant, locality-sensitive for Jaccard overlap).

@@ -15,21 +15,16 @@ Codec reality in this sandbox (no Pillow/libav):
     all five scanline filters (None/Sub/Up/Average/Paeth) in pure numpy,
     for 8-bit gray/RGB/RGBA non-interlaced. `encode_png` writes 8-bit
     RGB. Round-tripped and filter-exercised in tests.
-  * Baseline JPEG (SOF0, 4:4:4) decodes FOR REAL too (r6): pure-numpy
-    huffman + dequant + IDCT in `operators/jpeg_codec.py`, bomb-bounded
-    like the PNG path, with a pinned deterministic encoder as the
-    fixture source. Progressive/subsampled variants raise ValueError.
   * mp4/mp3 CONTAINERS parse for real (r6, operators/media_container.py):
     ISO-BMFF sample tables and MPEG audio framing are pure binary specs —
     frame sampling extracts the actual coded frame bytes at each tick.
-  * lossless WebP (VP8L) decodes for real (r6 second pass,
-    operators/webp_codec.py): LSB-first bitstream, canonical prefix
-    codes, LZ77 + color cache, subtract-green/predictor inverse
-    transforms. The remaining codec gate is LOSSY media — webp VP8/VP8X
-    and the mp4/mp3 coded bytes (video-intra/MDCT codecs):
-    `decode_image_real` raises NotImplementedError there, and feature
-    extraction falls back to a deterministic byte-histogram so the
-    pipeline shape stays exercised end-to-end.
+  * Every other image container — JPEG and WebP, lossless or lossy — and
+    the mp4/mp3 coded bytes are the codec gate: no workload feeds them
+    (the engine links web pages, and its image fixtures are BMP/PNG).
+    `decode_image_real` raises NotImplementedError, `_decodable_image`
+    is false, so `thumbnail_images` and `image_phash_table` skip the
+    row, and `extract_features` falls back to a deterministic
+    byte-histogram so the pipeline shape stays exercised end-to-end.
 """
 
 from __future__ import annotations
@@ -291,43 +286,23 @@ def decode_png(payload: bytes) -> np.ndarray:
     return img
 
 
-_JPEG_SOI = b"\xff\xd8"
-
-
 def decode_image_real(payload: bytes) -> np.ndarray:
-    """Decode an image payload. BMP, PNG, baseline JPEG, and lossless
-    WebP (VP8L) decode for real (pure numpy; PNG inflates via stdlib
-    zlib; JPEG is the SOF0 4:4:4 huffman+IDCT decoder in
-    operators/jpeg_codec.py — r6; VP8L is operators/webp_codec.py — r6
-    second pass). Only LOSSY webp (VP8/VP8X — a video-intra codec)
-    still needs a codec library absent from this sandbox."""
+    """Decode an image payload. BMP and PNG decode for real (pure numpy;
+    PNG inflates via stdlib zlib); every other container raises
+    NotImplementedError."""
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:8] == _PNG_SIG:
         return decode_png(payload)
-    if payload[:2] == _JPEG_SOI:
-        from .jpeg_codec import decode_jpeg
-
-        return decode_jpeg(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from .webp_codec import decode_webp
-
-        return decode_webp(payload)
     raise NotImplementedError(
-        "unknown image container; BMP, PNG, baseline JPEG, and lossless "
-        "WebP decode natively (lossy VP8/VP8X webp needs an imaging "
-        "library not present in this environment)"
+        "unknown image container; BMP and PNG decode natively (JPEG and "
+        "WebP need an imaging library not present in this environment)"
     )
 
 
 def _decodable_image(payload: bytes) -> bool:
     """Magic-byte gate shared by the feature/thumbnail/phash stages."""
-    return (
-        payload[:2] == b"BM"
-        or payload[:8] == _PNG_SIG
-        or payload[:2] == _JPEG_SOI
-        or (payload[:4] == b"RIFF" and payload[8:16] == b"WEBPVP8L")
-    )
+    return payload[:2] == b"BM" or payload[:8] == _PNG_SIG
 
 
 # ---------------------------------------------------------------------------
@@ -427,10 +402,7 @@ def thumbnail_images(assets: DataFrame, out_h: int = 16, out_w: int = 16) -> Dat
         for pdf in batches:
             ids, thumbs = [], []
             for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                # 16-byte probe: the webp arm checks bytes 8..16
-                # (review r6: an 8-byte prefix silently excluded webp
-                # from thumbnails while extract_features decoded it)
-                if payload is None or not _decodable_image(bytes(payload[:16])):
+                if payload is None or not _decodable_image(bytes(payload[:8])):
                     continue
                 try:
                     img = decode_image_real(bytes(payload))

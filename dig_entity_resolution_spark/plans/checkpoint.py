@@ -271,6 +271,16 @@ class ParquetCheckpoint:
     def read(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self.table_path(stage))
 
+    def stage(self, name: str, build, resume: bool, computed: list[str]) -> DataFrame:
+        """The pipelines' stage runner: on resume a complete stage is read
+        back; otherwise build() runs, `name` is appended to `computed` and
+        the result is written."""
+        if resume and self.is_complete(name):
+            return self.read(name)
+        df = build()
+        computed.append(name)
+        return self.write(name, df)
+
     def lineage(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self.meta_path(stage))
 

@@ -36,6 +36,7 @@ the pool) — pass them via CurationConfig(lm=..., dsir_target_texts=...).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -318,15 +319,10 @@ class CurationPipeline:
         table (or the selected corpus when cfg.pack is False)."""
         if "doc_id" not in docs.columns or "text" not in docs.columns:
             raise ValueError("curation input needs doc_id and text columns")
-        ck = self.ckpt
         self.computed_stages = []
-
-        def stage(name: str, build) -> DataFrame:
-            if resume and ck.is_complete(name):
-                return ck.read(name)
-            df = build()
-            self.computed_stages.append(name)
-            return ck.write(name, df)
+        stage = partial(
+            self.ckpt.stage, resume=resume, computed=self.computed_stages
+        )
 
         hygiene = stage("hygiene", lambda: self._hygiene(docs))
         quality = stage("quality", lambda: self._quality(hygiene))

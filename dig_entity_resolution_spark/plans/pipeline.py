@@ -10,6 +10,7 @@ Launchable via `spark-submit --py-files er_engine.zip run_pipeline.py`.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -413,15 +414,10 @@ class ERPipeline:
     # -- orchestration ----------------------------------------------------
     def run(self, pages: DataFrame, resume: bool = False) -> DataFrame:
         """Run (or resume) the full pipeline; returns the clusters table."""
-        ck = self.ckpt
         self.computed_stages = []
-
-        def stage(name: str, build) -> DataFrame:
-            if resume and ck.is_complete(name):
-                return ck.read(name)
-            df = build()
-            self.computed_stages.append(name)
-            return ck.write(name, df)
+        stage = partial(
+            self.ckpt.stage, resume=resume, computed=self.computed_stages
+        )
 
         records = self._gate_records(
             self._upgrade_records(stage("records", lambda: self._records(pages)))

@@ -22,7 +22,8 @@ batch run over the union (which keeps the LATEST snapshot per url) would
 produce — the right setting for a standing crawl that recrawls constantly.
 Same-timestamp recrawls keep the base snapshot in latest_wins; streams
 whose sources emit no warc_ts should dedup upstream
-(streaming.incremental.dedup_recrawled_urls) or stay append-only.
+(`dropDuplicatesWithinWatermark(["url"])` on the source stream) or stay
+append-only.
 
 At 10^12-doc scale this is the standing-ingest layout: one long-lived
 streaming query, warehouse runs named by batch id, each run a valid resume
