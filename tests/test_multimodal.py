@@ -62,21 +62,6 @@ def test_decode_image_real_bmp_yes_compressed_no():
             decode_image_real(payload)
 
 
-def test_jpeg_payload_gets_histogram_features(spark):
-    """A JPEG-magic payload is codec-gated: extract_features does not raise
-    and falls back to the byte histogram (16 bins summing to 1), and
-    thumbnail_images skips the row."""
-    from dig_entity_resolution_spark.operators.multimodal import ASSET_SCHEMA
-
-    payload = b"\xff\xd8\xff\xe0" + bytes(range(256))
-    rows = [(1, "image", bytearray(payload), "image/jpeg", 8, 8, None)]
-    df = spark.createDataFrame(rows, ASSET_SCHEMA)
-    feats = extract_features(df).collect()[0].features
-    assert len(feats) == N_FEATURES
-    assert sum(feats) == pytest.approx(1.0)
-    assert thumbnail_images(df).collect() == []
-
-
 # -- Spark-side stages ---------------------------------------------------------
 
 
@@ -110,6 +95,21 @@ def test_extract_features_real_decode_paths(spark):
             assert f[0] > 0.1  # sine RMS, not near-silence
         else:  # video: compressed container → byte-histogram fallback
             assert sum(f) == pytest.approx(1.0)
+
+
+def test_jpeg_payload_gets_histogram_features(spark):
+    """A JPEG-magic payload is codec-gated: extract_features does not raise
+    and falls back to the byte histogram (16 bins summing to 1), and
+    thumbnail_images skips the row."""
+    from dig_entity_resolution_spark.operators.multimodal import ASSET_SCHEMA
+
+    payload = b"\xff\xd8\xff\xe0" + bytes(range(256))
+    rows = [(1, "image", bytearray(payload), "image/jpeg", 8, 8, None)]
+    df = spark.createDataFrame(rows, ASSET_SCHEMA)
+    feats = extract_features(df).collect()[0].features
+    assert len(feats) == N_FEATURES
+    assert sum(feats) == pytest.approx(1.0)
+    assert thumbnail_images(df).collect() == []
 
 
 def test_thumbnail_images_real_resize(spark):
