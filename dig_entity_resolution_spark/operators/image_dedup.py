@@ -223,10 +223,11 @@ def synth_image_corpus(
     asset_id = group * 1000 + variant for planted rows, 900000+i for
     distinct rows — tests recover the planted grouping from id // 1000.
     """
+    from .jpeg_codec import encode_jpeg
     from .multimodal import encode_png
 
     rng = np.random.default_rng(seed)
-    enc = {"bmp": encode_bmp, "png": encode_png}[fmt]
+    enc = {"bmp": encode_bmp, "png": encode_png, "jpeg": encode_jpeg}[fmt]
     rows = []
     for g in range(n_groups):
         base = rng.integers(0, 256, size=(48, 64, 3)).astype(np.uint8)

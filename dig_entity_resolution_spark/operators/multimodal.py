@@ -15,12 +15,16 @@ Codec reality in this sandbox (no Pillow/libav):
     all five scanline filters (None/Sub/Up/Average/Paeth) in pure numpy,
     for 8-bit gray/RGB/RGBA non-interlaced. `encode_png` writes 8-bit
     RGB. Round-tripped and filter-exercised in tests.
+  * Baseline JPEG (SOF0, 4:4:4) decodes FOR REAL too (r6): pure-numpy
+    huffman + dequant + IDCT in `operators/jpeg_codec.py`, bomb-bounded
+    like the PNG path, with a pinned deterministic encoder as the
+    fixture source. Progressive/subsampled variants raise ValueError.
   * mp4/mp3 CONTAINERS parse for real (r6, operators/media_container.py):
     ISO-BMFF sample tables and MPEG audio framing are pure binary specs —
     frame sampling extracts the actual coded frame bytes at each tick.
-  * Every other image container — JPEG and WebP, lossless or lossy — and
-    the mp4/mp3 coded bytes are the codec gate: no workload feeds them
-    (the engine links web pages, and its image fixtures are BMP/PNG).
+  * Every other image container — WebP, lossless or lossy — and the
+    mp4/mp3 coded bytes are the codec gate: no workload feeds them (the
+    engine links web pages, and its image fixtures are BMP/PNG/JPEG).
     `decode_image_real` raises NotImplementedError, `_decodable_image`
     is false, so `thumbnail_images` and `image_phash_table` skip the
     row, and `extract_features` falls back to a deterministic
@@ -286,23 +290,36 @@ def decode_png(payload: bytes) -> np.ndarray:
     return img
 
 
+_JPEG_SOI = b"\xff\xd8"
+
+
 def decode_image_real(payload: bytes) -> np.ndarray:
-    """Decode an image payload. BMP and PNG decode for real (pure numpy;
-    PNG inflates via stdlib zlib); every other container raises
-    NotImplementedError."""
+    """Decode an image payload. BMP, PNG and baseline JPEG decode for real
+    (pure numpy; PNG inflates via stdlib zlib; JPEG is the SOF0 4:4:4
+    huffman+IDCT decoder in operators/jpeg_codec.py); every other
+    container raises NotImplementedError."""
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:8] == _PNG_SIG:
         return decode_png(payload)
+    if payload[:2] == _JPEG_SOI:
+        from .jpeg_codec import decode_jpeg
+
+        return decode_jpeg(payload)
     raise NotImplementedError(
-        "unknown image container; BMP and PNG decode natively (JPEG and "
-        "WebP need an imaging library not present in this environment)"
+        "unknown image container; BMP, PNG and baseline JPEG decode "
+        "natively (WebP needs an imaging library not present in this "
+        "environment)"
     )
 
 
 def _decodable_image(payload: bytes) -> bool:
     """Magic-byte gate shared by the feature/thumbnail/phash stages."""
-    return payload[:2] == b"BM" or payload[:8] == _PNG_SIG
+    return (
+        payload[:2] == b"BM"
+        or payload[:8] == _PNG_SIG
+        or payload[:2] == _JPEG_SOI
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -40,11 +40,15 @@ def test_hash_pure_function_properties():
     [
         ("bmp", "dhash", 3),
         ("png", "dhash", 3),
+        # jpeg is LOSSY: quantization perturbs low frequencies, so planted
+        # within-group pHash distances reach 6 (cross-group stays ≥ 18) —
+        # wider threshold, pHash (resize/noise-robust by construction)
+        ("jpeg", "phash", 8),
     ],
 )
 def test_planted_groups_recovered(spark, fmt, fp_col, max_h):
     """Perceptual hashing + banded blocking recovers exactly the planted
-    near-dup groups through the real codec for both formats."""
+    near-dup groups through the real codec for all three formats."""
     assets = synth_image_corpus(spark, fmt=fmt)
     pairs = image_near_dup_pairs(
         assets, max_hamming=max_h, fp_col=fp_col

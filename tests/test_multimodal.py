@@ -49,12 +49,13 @@ def test_resize_nearest():
 def test_decode_image_real_bmp_yes_compressed_no():
     img = np.zeros((4, 4, 3), dtype=np.uint8)
     assert decode_image_real(encode_bmp(img)).shape == (4, 4, 3)
-    # PNG decodes FOR REAL (stdlib zlib) — a bare signature is a MALFORMED
-    # png (ValueError); JPEG and WebP (lossless or lossy) are codec-gated
+    # PNG and JPEG decode FOR REAL — a bare signature or a truncated jpeg
+    # is MALFORMED (ValueError); WebP (lossless or lossy) is codec-gated
     with pytest.raises(ValueError):
         decode_image_real(b"\x89PNG\r\n\x1a\n")
+    with pytest.raises(ValueError):
+        decode_image_real(b"\xff\xd8\xff\xe0jpeg")
     for payload in (
-        b"\xff\xd8\xff\xe0jpeg",
         b"RIFF\x00\x00\x00\x00WEBPVP8L",
         b"RIFF\x00\x00\x00\x00WEBPVP8 ",
     ):
@@ -97,14 +98,14 @@ def test_extract_features_real_decode_paths(spark):
             assert sum(f) == pytest.approx(1.0)
 
 
-def test_jpeg_payload_gets_histogram_features(spark):
-    """A JPEG-magic payload is codec-gated: extract_features does not raise
-    and falls back to the byte histogram (16 bins summing to 1), and
+def test_webp_payload_gets_histogram_features(spark):
+    """A lossless-WebP payload is codec-gated: extract_features does not
+    raise and falls back to the byte histogram (16 bins summing to 1), and
     thumbnail_images skips the row."""
     from dig_entity_resolution_spark.operators.multimodal import ASSET_SCHEMA
 
-    payload = b"\xff\xd8\xff\xe0" + bytes(range(256))
-    rows = [(1, "image", bytearray(payload), "image/jpeg", 8, 8, None)]
+    payload = b"RIFF\x00\x00\x00\x00WEBPVP8L" + bytes(range(256))
+    rows = [(1, "image", bytearray(payload), "image/webp", 8, 8, None)]
     df = spark.createDataFrame(rows, ASSET_SCHEMA)
     feats = extract_features(df).collect()[0].features
     assert len(feats) == N_FEATURES
@@ -232,8 +233,9 @@ def test_png_unsupported_variants_raise():
 
     with _pytest.raises(ValueError, match="not a PNG"):
         decode_png(b"\xff\xd8\xff\xe0 not png")
-    # JPEG and lossless WebP are codec-gated, not decoded
-    with _pytest.raises(NotImplementedError):
+    # jpeg decodes for real — truncated stream is malformed; lossless
+    # WebP is codec-gated, not decoded
+    with _pytest.raises(ValueError, match="JPEG"):
         decode_image_real(b"\xff\xd8\xff\xe0" + b"\x00" * 32)
     with _pytest.raises(NotImplementedError):
         decode_image_real(b"RIFF\x00\x00\x00\x00WEBPVP8L" + b"\x00" * 32)
