@@ -90,8 +90,10 @@ def _shingle_rows(
     coalesces upstream join/checkpoint outputs by BYTES (a 50k-doc corpus
     is one ~64MB partition), which is blind to the per-row CPU of hashing
     ~300 shingles × num_perm — measured 27s single-core vs 4.4s spread at
-    the 10x bench corpus. Same rule as score_pairs; at real scale this is
-    a no-op rebalance of narrow rows. Callers whose input is already
+    the 10x bench corpus. Same rule as score_pairs. repartition(n) always
+    shuffles into exactly n partitions, so it is never a no-op: it costs
+    one extra shuffle of the narrow rows and caps the shingle stage at n
+    tasks, however large the corpus grows. Callers whose input is already
     spread (repartitioned right after a scan) pass False.
 
     k ≤ 8 is required: the verify packs each shingle into one long

@@ -331,9 +331,11 @@ def score_pairs(
     # AQE coalesces the hydrate-join output by BYTES, which is blind to the
     # CPU cost of the JW kernel — a ~100MB pair batch collapses to 2-4
     # partitions and the vectorized scoring runs on 2-4 cores. Repartition
-    # to the session's parallelism so every Python worker gets work; at real
-    # scale the pair table dwarfs the advisory size and this is a no-op
-    # rebalance.
+    # to 3x the session's parallelism so every Python worker gets work.
+    # repartition(n) always shuffles into exactly n partitions, so this is
+    # never a no-op: it costs one extra round-robin shuffle of the hydrated
+    # pairs and caps the scoring stage at n tasks, however large the pair
+    # table grows.
     sc = pairs.sparkSession.sparkContext
     hydrated = hydrated.repartition(sc.defaultParallelism * 3)
     cos = (

@@ -82,7 +82,9 @@ def _records(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# SQL twins of normalize/tokenize (must mirror functions/normalize.py exactly)
+# SQL twins of normalize/tokenize (must mirror functions/normalize.py exactly).
+# The twin lowercases with lower(); normalize_text's translate fold gives the
+# same output as Spark's lower() (tests/test_normalize.py).
 SQL_NORM = (
     "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),"
     " ' +', ' ', 'g'))"
@@ -536,6 +538,19 @@ bands AS (
     )
 
 
+def _md5_signatures(spark, sf_dir):
+    """(record_id, sig) of the non-empty records, shingled once: the
+    round-robin exchange stops CollapseProject from inlining the shingles
+    into each permutation lambda (notes #62), as in minhash_lsh_blocks."""
+    return (
+        _records(spark, sf_dir)
+        .filter(F.length("norm_text") > 0)
+        .select("record_id", char_shingles("norm_text", 5).alias("sh"))
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("record_id", minhash_signature("sh", _NUM_PERM, "md5").alias("sig"))
+    )
+
+
 @_q(
     "minhash_signatures",
     f"WITH {_sql_minhash_cte()} "
@@ -544,11 +559,7 @@ bands AS (
     + " FROM sigs",
 )
 def q_minhash_signatures(spark, sf_dir):
-    recs = _records(spark, sf_dir).filter(F.length("norm_text") > 0)
-    sig = recs.select(
-        "record_id",
-        minhash_signature(char_shingles("norm_text", 5), _NUM_PERM, "md5").alias("sig"),
-    )
+    sig = _md5_signatures(spark, sf_dir)
     return sig.select(
         "record_id",
         *[F.element_at("sig", i + 1).alias(f"sig{i}") for i in range(_NUM_PERM)],
@@ -566,11 +577,7 @@ def q_minhash_signatures(spark, sf_dir):
     + ") SELECT record_id, band_id, band_hash FROM unpivoted",
 )
 def q_lsh_band_buckets(spark, sf_dir):
-    recs = _records(spark, sf_dir).filter(F.length("norm_text") > 0)
-    sig = recs.select(
-        "record_id",
-        minhash_signature(char_shingles("norm_text", 5), _NUM_PERM, "md5").alias("sig"),
-    )
+    sig = _md5_signatures(spark, sf_dir)
     return sig.select(
         "record_id",
         F.explode(lsh_band_keys("sig", _BANDS, _ROWS, "md5")).alias("b"),

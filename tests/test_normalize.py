@@ -88,3 +88,46 @@ def test_shingle_pack_injective_on_corpus_shingles(spark):
     n_s = enc.select("s").distinct().count()
     n_p = enc.select("p").distinct().count()
     assert n_s == n_p  # injective on this shingle set
+
+
+def test_normalize_text_case_fold_equals_lower_for_every_code_point(spark):
+    # normalize_text folds case without lower() (whose ICU start-up costs
+    # ~1.4 s per JVM); the fold must give what the lower()-based formula
+    # gives for every input. Every non-surrogate code point, alone and
+    # between ASCII letters, plus NULL. A leading 'A' keeps decode() from
+    # reading U+FEFF as a byte-order mark; substring drops it again.
+    from dig_entity_resolution_spark.functions.normalize import (
+        NORM_STRIP_RE,
+        WS_COLLAPSE_RE,
+    )
+
+    assert "lower(" not in str(normalize_text("t"))
+
+    def reference(c):
+        c = F.lower(c)
+        c = F.regexp_replace(c, NORM_STRIP_RE, " ")
+        c = F.regexp_replace(c, WS_COLLAPSE_RE, " ")
+        return F.trim(c)
+
+    cps = spark.range(0, 0x110000).filter(~F.col("id").between(0xD800, 0xDFFF))
+    chars = cps.select(
+        "id",
+        F.expr(
+            "substring(decode(unhex(concat('00000041', lpad(hex(id), 8, '0'))),"
+            " 'utf-32'), 2)"
+        ).alias("c"),
+    )
+    cover = chars.select(
+        F.count("*").alias("n"),
+        F.sum((F.length("c") == 1).cast("long")).alias("single"),
+        F.sum((F.ascii("c") == F.col("id")).cast("long")).alias("exact"),
+    ).collect()[0]
+    assert cover.n == cover.single == cover.exact == 0x110000 - 0x800
+
+    texts = chars.select(
+        F.explode(
+            F.array("c", F.concat(F.lit("Ab"), "c", F.lit("Cd")))
+        ).alias("t")
+    ).unionByName(spark.range(1).select(F.lit(None).cast("string").alias("t")))
+    diff = texts.filter(~normalize_text("t").eqNullSafe(reference(F.col("t"))))
+    assert diff.count() == 0

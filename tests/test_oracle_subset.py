@@ -51,3 +51,32 @@ def test_query_matches_oracle(spark, duck, name):
     assert sorted(sdf.columns) == sorted(odf.columns)
     a, b = canon(sdf), canon(odf)
     assert a.equals(b), f"value mismatch in {name}"
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text of every lambdafunction(...) call in a plan string, up to
+    its matching close paren."""
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth, i = 0, start + len("lambdafunction")
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+            if depth == 0:
+                break
+        bodies.append(plan[start:i])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+@pytest.mark.parametrize("name", ["minhash_signatures", "lsh_band_buckets"])
+def test_minhash_gate_queries_shingle_once(spark, name):
+    # shingles inside a permutation lambda would be recomputed num_perm
+    # times per record; the exchange under them keeps them out (notes #62)
+    df = entrymod.queries()[name](spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    bodies = _lambda_bodies(plan)
+    assert bodies
+    assert not [b for b in bodies if "array_distinct" in b]
+    assert plan.count("array_distinct") == 1
